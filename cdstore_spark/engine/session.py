@@ -13,6 +13,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """min(24g, 40% of the host's MemTotal): the driver JVM runs every
+    local[N] task, and a heap sized past the host's RAM gets the JVM
+    OOM-killed rather than failing a task (24g on a 15 GB host)."""
+    try:
+        with open("/proc/meminfo") as f:
+            mem_kb = next(int(line.split()[1]) for line in f
+                          if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "24g"
+    return f"{min(24 * 1024, mem_kb * 2 // 5 // 1024)}m"
+
+
 def get_spark(app: str = "cdstore-spark", parallelism: int | None = None,
               shuffle_partitions: int | None = None,
               extra_conf: dict[str, str] | None = None) -> SparkSession:
@@ -53,7 +66,8 @@ def get_spark(app: str = "cdstore-spark", parallelism: int | None = None,
         # setting only shapes the remaining small-row UDF stages
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )

@@ -29,9 +29,24 @@ NGRAM = 3
 JACCARD_THRESHOLD = 0.8
 
 
+_ASCII_UPPER = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
+
+
+def _lower(c):
+    """lower(c), with all-ASCII values (as many chars as bytes) mapped
+    A-Z -> a-z by translate — the same output, since Unicode lowercasing
+    changes no other ASCII char. Spark's default ICU case mapping loads
+    its data on the first lower() of each JVM (1.5-1.8 s measured on a
+    4-core host), a stall the doc path's gram scan otherwise pays on its
+    critical path; an ASCII corpus never needs it."""
+    return (F.when(F.length(c) == F.octet_length(c),
+                   F.translate(c, _ASCII_UPPER, _ASCII_UPPER.lower()))
+            .otherwise(F.lower(c)))
+
+
 def _tokens(df: DataFrame) -> DataFrame:
     return df.select("doc_id",
-                     F.split(F.lower(F.col("text")), r"\s+").alias("toks"))
+                     F.split(_lower(F.col("text")), r"\s+").alias("toks"))
 
 
 def doc_ngrams(df: DataFrame, n: int = NGRAM) -> DataFrame:
@@ -91,66 +106,73 @@ def dedup_exact(df: DataFrame) -> DataFrame:
             .where(F.col("n_docs") > 1))
 
 
+def _content_key(ghs):
+    """128-bit content key of a doc: md5 over its sorted gram hashes."""
+    return F.md5(F.concat_ws(",", F.transform(
+        ghs, lambda x: x.cast("string"))))
+
+
 def _pair_jaccard(cand: DataFrame, g: DataFrame,
                   threshold: float) -> DataFrame:
     """Exact Jaccard computed ONLY for the given candidate pairs.
 
-    cand(a, b) routes each pair through the doc-keyed gram table twice
-    (equi-joins on doc id, then on gram hash), so work is linear in
-    |cand| x grams-per-doc — never in the all-pairs gram join. This is
-    the shared verification tail of both the prefix-filtered exact path
-    and the MinHash-LSH path.
+    ONE per-doc aggregation of `g` collects each doc's sorted gram-hash
+    array (`ks`); each pair's intersection is size(array_intersect) of
+    its two docs' arrays, and the set sizes are the array sizes. The
+    arrays hold distinct values (`_gram_hashed` dedups per doc), so the
+    integers — and therefore the doubles — are exactly those of a gram
+    equi-join count. Work is linear in |cand| x grams-per-doc — never in
+    the all-pairs gram join. This is the shared verification tail of
+    both the prefix-filtered exact path and the MinHash-LSH path.
 
     Work is deduplicated per distinct CONTENT pair (round 6, the same
     idea as the audio verify stage): Jaccard is a pure function of the
     two gram SETS, and dup-heavy corpora repeat the same set across many
     pairs — the bench's planted 5k-member hot group yields 629,359
     candidate pairs that are all ONE content pair. Each doc gets a
-    128-bit content key (md5 over its sorted gram hashes, derived from
-    `g` itself so every caller gets the dedup), the gram joins run on one
+    128-bit content key (`_content_key`, derived from `g` itself so
+    every caller gets the dedup), the intersection runs on one
     representative pair per distinct (ka, kb), and results join back to
-    the full pair list. Identical output: key-equal docs have equal gram
-    sets by construction, so every pair sharing (ka, kb) has the same
-    Jaccard.
+    the full pair list. Key-equal docs have equal gram sets unless md5
+    collides, which is checked rather than assumed: a second,
+    independent per-doc hash (xxhash64 of the same array) rides through
+    `kand`, its min and max per (ka, kb) come out of the `rep` aggregate
+    that exists anyway, and a mismatch fails the query with
+    raise_error — no extra Spark job.
+
+    `ks` and `kand` are eager lineage cuts (scoped_checkpoint), not
+    persists: both feed several branches, and a persisted table nests its
+    whole cached plan into every downstream plan string, which AQE
+    rebuilds on each stage update (25 MB per query on perfbench's doc_hot
+    workload before the cut).
     """
-    from ..engine.scope import scoped_persist
-    # ONE persisted per-doc aggregation yields BOTH the content key and
-    # the gram-set size (sz = size of the same collected array the key
-    # hashes — a separate count() agg was a second full pass over g, and
-    # the unpersisted key subtree was computed once per join alias). sz
-    # rides along with the key through kand/rep, so the two sizes joins
-    # the old shape paid at the end are gone too.
-    ks = scoped_persist(
+    from ..engine.scope import scoped_checkpoint
+    ks = scoped_checkpoint(
         g.groupBy("doc_id")
         .agg(F.sort_array(F.collect_list("gh")).alias("ghs"))
-        .select("doc_id",
-                F.md5(F.concat_ws(",", F.transform(
-                    "ghs", lambda x: x.cast("string")))).alias("ck"),
-                F.size("ghs").alias("sz")))
-    kand = scoped_persist(
-        cand.join(ks.select(F.col("doc_id").alias("a"),
-                            F.col("ck").alias("ka"),
-                            F.col("sz").alias("sz_a")), "a")
-        .join(ks.select(F.col("doc_id").alias("b"),
-                        F.col("ck").alias("kb"),
-                        F.col("sz").alias("sz_b")), "b"))
-    # sz_a/sz_b are functions of ka/kb (equal content key ⇒ equal gram
-    # set ⇒ equal size), so min() just picks the shared value
+        .select("doc_id", "ghs", _content_key(F.col("ghs")).alias("ck"),
+                F.xxhash64("ghs").alias("xh")))
+    kand = scoped_checkpoint(
+        cand.join(ks.select("doc_id", "ck", "xh").toDF("a", "ka", "xa"), "a")
+        .join(ks.select("doc_id", "ck", "xh").toDF("b", "kb", "xb"), "b"))
     rep = (kand.groupBy("ka", "kb")
            .agg(F.min(F.struct("a", "b")).alias("r"),
-                F.min("sz_a").alias("sz_a"), F.min("sz_b").alias("sz_b"))
+                F.min("xa").alias("xa0"), F.max("xa").alias("xa1"),
+                F.min("xb").alias("xb0"), F.max("xb").alias("xb1"))
            .select(F.col("r.a").alias("a"), F.col("r.b").alias("b"),
-                   "ka", "kb", "sz_a", "sz_b"))
-    ga = g.select(F.col("doc_id").alias("a"), "gh")
-    gb = g.select(F.col("doc_id").alias("b"), "gh")
-    inter = (rep.select("a", "b").join(ga, "a")
-             .join(gb, ["b", "gh"])
-             .groupBy("a", "b")
-             .agg(F.count(F.lit(1)).alias("inter")))
-    raw_j = (F.col("inter")
-             / (F.col("sz_a") + F.col("sz_b") - F.col("inter")))
-    res = (inter.join(rep, ["a", "b"])
-           .where(raw_j >= threshold)          # threshold on the raw value
+                   "ka", "kb",
+                   ((F.col("xa0") != F.col("xa1"))
+                    | (F.col("xb0") != F.col("xb1"))).alias("collided")))
+    inter = F.size(F.array_intersect("ga", "gb"))
+    raw_j = inter / (F.size("ga") + F.size("gb") - inter)
+    res = (rep.join(ks.select("doc_id", "ghs").toDF("a", "ga"), "a")
+           .join(ks.select("doc_id", "ghs").toDF("b", "gb"), "b")
+           # threshold on the raw value; the collision check sits in the
+           # same predicate so it sees every representative pair
+           .where(F.when(F.col("collided"), F.raise_error(F.lit(
+               "content-key collision: docs with different gram sets "
+               "share an md5 content key")))
+               .otherwise(raw_j >= threshold))
            .select("ka", "kb",
                    (F.floor(raw_j * F.lit(1e6) + F.lit(0.5))
                     / F.lit(1e6)).alias("jaccard")))
@@ -318,17 +340,33 @@ def minhash_lsh_pairs(df: DataFrame, cfg: PipelineConfig = DEFAULT,
     exceeds the cap; above it, the representative chain keeps each
     duplicate group one connected component, so the downstream cluster
     decision (doc_dedup_clusters) is unaffected while the PAIR list is
-    the documented linear skew-bounded subset."""
+    the documented linear skew-bounded subset.
+
+    Not lazy: the candidate pairs and the verification tables are
+    materialized behind lineage cuts (scoped_checkpoint), so the call
+    itself runs Spark jobs, and the returned plan reads their
+    checkpoints. Inside a cache_scope, consume the result before the
+    scope exits."""
     from ..engine.bucket_pairs import capped_bucket_pairs
-    from ..engine.scope import scoped_persist
-    sigs = doc_signatures(df, cfg)
+    from ..engine.scope import scoped_checkpoint
+    # a corpus stored as one row group reads as ONE partition, which
+    # would run the Python signature pass (and the partial bucket
+    # aggregation after it) as a single task: spread such an input over
+    # the cores first. A no-op at scale, where the scan is wider; on the
+    # documents table scan the partition probe runs no Spark job.
+    par = df.sparkSession.sparkContext.defaultParallelism
+    sig_in = (df.repartition(par, "doc_id")
+              if df.rdd.getNumPartitions() < par else df)
+    sigs = doc_signatures(sig_in, cfg)
     bands = sigs.select("doc_id",
                         F.posexplode("bands").alias("band_idx", "bh"))
     # dedup_key=[]: only (a, b) survives the distinct below, so hot
     # buckets with identical member sets across the 32 bands (an exact-
     # duplicate group lands its whole membership in one bucket PER band)
-    # are enumerated once, not 32 times
-    cand = scoped_persist(
+    # are enumerated once, not 32 times. Checkpointed, not persisted: cand
+    # feeds the gram prune and both verification joins, and as a cached
+    # plan it would be printed into each of them
+    cand = scoped_checkpoint(
         capped_bucket_pairs(bands, ["band_idx", "bh"], "doc_id",
                             cap=cfg.bucket_cap, soft=cfg.bucket_soft,
                             dedup_key=[])
@@ -347,7 +385,7 @@ def minhash_lsh_pairs(df: DataFrame, cfg: PipelineConfig = DEFAULT,
     ids = cand.select(F.explode(F.array("a", "b")).alias("doc_id")
                       ).distinct()
     g = _gram_hashed(df.join(ids, "doc_id", "left_semi"))
-    return _pair_jaccard(cand, scoped_persist(g), threshold)
+    return _pair_jaccard(cand, g, threshold)
 
 
 def simhash_hamming_pairs(df: DataFrame, cfg: PipelineConfig = DEFAULT,

@@ -12,7 +12,10 @@ sys.path.insert(0, REPO)
 @pytest.fixture(scope="session")
 def spark():
     from cdstore_spark.engine.session import get_spark
-    s = get_spark("pytest", parallelism=8)
+    # the host's core count (SPARK_GRAFT_CPUS, else os.cpu_count()), not a
+    # fixed width that oversubscribes small hosts
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 8)
+    s = get_spark("pytest", parallelism=cores)
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

@@ -264,10 +264,20 @@ class TestBucketPairs:
         # regression guard (mirrors test_plans.py's audio-path guard): the
         # doc candidate joins must keep the groupBy+sort_array enumeration
         # — a Window reappearing means the double-window plan regressed;
-        # the shuffle must hash-partition on the band/block key
+        # the shuffle must hash-partition on the band/block key.
+        # minhash_lsh_pairs returns a plan over its checkpointed candidate
+        # pairs, so its band shuffle is checked where it is built: the
+        # capped enumerator over doc_signatures bands
+        from cdstore_spark.config import DEFAULT
+        from cdstore_spark.engine.bucket_pairs import capped_bucket_pairs
         from cdstore_spark.functions import textops as X
         docs = spark.read.parquet(f"{SF}/documents.parquet")
-        for dfq, key in ((X.minhash_lsh_pairs(docs), "bh"),
+        bands = X.doc_signatures(docs).select(
+            "doc_id", F.posexplode("bands").alias("band_idx", "bh"))
+        lsh = capped_bucket_pairs(bands, ["band_idx", "bh"], "doc_id",
+                                  cap=DEFAULT.bucket_cap,
+                                  soft=DEFAULT.bucket_soft, dedup_key=[])
+        for dfq, key in ((lsh, "bh"),
                          (X.simhash_hamming_pairs(docs), "block_key")):
             plan = dfq._jdf.queryExecution().explainString(
                 spark._jvm.org.apache.spark.sql.execution.ExplainMode
@@ -402,6 +412,74 @@ class TestTextops:
             spark.createDataFrame(pairs[["a", "b"]]),
             df.select(F.col("doc_id").alias("clip_id"))).toPandas()
         assert (clus["cluster_id"] == 0).all()             # one component
+
+    def test_doc_pair_plan_strings_stay_small(self, spark):
+        """The doc verification tables are lineage cuts, not stacked
+        persists: a query over the pair output plans over LogicalRDD
+        leaves instead of printing every nested cached plan, a string
+        AQE rebuilds on each stage update (4.5 MB / 1.4 MB at this tier
+        with stacked persists)."""
+        from cdstore_spark.engine.scope import cache_scope
+        from cdstore_spark.functions import textops as X
+        docs = spark.read.parquet(f"{SF}/documents.parquet")
+        for fn in (X.minhash_lsh_pairs, X.jaccard_pairs):
+            with cache_scope():
+                pairs = fn(docs).persist()
+                q = pairs.groupBy().count()
+                assert q.collect()[0][0] > 0
+                size = len(q._jdf.queryExecution().toString())
+                pairs.unpersist()
+            assert size <= 64 * 1024, (fn.__name__, size)
+
+    def test_lsh_scope_releases_checkpoints(self, spark):
+        """Every table the doc path materializes — scoped persists and
+        scoped checkpoints alike — is released when the enclosing
+        cache_scope exits."""
+        from cdstore_spark.engine.scope import cache_scope
+        from cdstore_spark.functions import textops as X
+
+        def persistent() -> dict[int, str]:
+            lst = spark.sparkContext._jsc.sc().getPersistentRDDs().toList()
+            return {lst.apply(i)._1(): lst.apply(i)._2().toString()
+                    for i in range(lst.size())}
+
+        spark.catalog.clearCache()
+        before = persistent()
+        docs = spark.read.parquet(f"{SF}/documents.parquet")
+        with cache_scope():
+            assert X.minhash_lsh_pairs(docs).count() > 0
+            during = {k: v for k, v in persistent().items()
+                      if k not in before}
+        assert any("localCheckpoint" in v for v in during.values()), during
+        left = {k: v for k, v in persistent().items() if k not in before}
+        assert left == {}, f"doc path left persistent RDDs: {left}"
+
+    def test_content_key_collision_fails_loudly(self, spark, monkeypatch):
+        """md5 content key ⇒ equal gram sets is checked, not assumed:
+        with the key forced constant, pairs of different content share
+        one (ka, kb), their independent xxhash64 content hashes disagree
+        in the representative aggregate, and the query fails."""
+        from cdstore_spark.functions import textops as X
+        base = " ".join(f"w{j}" for j in range(40))
+        df = spark.createDataFrame(
+            [(i, f"{base} tail{i}", "en", "s", 0) for i in range(3)],
+            "doc_id long, text string, lang string, source string,"
+            " n_chars long")
+        assert len(X.minhash_lsh_pairs(df).toPandas()) == 3
+        monkeypatch.setattr(X, "_content_key", lambda ghs: F.lit("k"))
+        with pytest.raises(Exception, match="content-key collision"):
+            X.minhash_lsh_pairs(df).toPandas()
+
+    def test_ascii_lower_matches_lower(self, spark):
+        """The tokenizer's ASCII translate path and lower() agree on
+        ASCII, non-ASCII, empty and NULL text."""
+        from cdstore_spark.functions import textops as X
+        texts = ["MiXeD Case 123 !?", "", None, "ÀÉÎ Straße ΣΊΣΥΦΟΣ",
+                 "tab\tNEW\nLINE", "İstanbul DŽ", "@[`{ ~\x7f"]
+        df = spark.createDataFrame([(t,) for t in texts], "t string")
+        got = df.select(X._lower(F.col("t")).alias("a"),
+                        F.lower("t").alias("b")).collect()
+        assert [r["a"] for r in got] == [r["b"] for r in got]
 
     def test_lang_id_matches_golden_mirror(self, spark):
         """Distributed profile build + scoring == the single-node mirror."""
