@@ -66,7 +66,8 @@ class PipelineConfig:
     empty_sentinel: int = 0xFFFFFFFFFFFFFFFF
 
     # --- S6 candidate join / skew handling -----------------------------------
-    # buckets larger than this are triangle-split into blocks for balance
+    # (sub-)buckets larger than this are cut into blocks of <= bucket_soft
+    # members; each (i <= j) block pair is one bounded unit of work
     bucket_soft: int = 32
     # skew split: buckets larger than this are partitioned into sub-buckets
     # of <= bucket_cap members (deterministic clip_id order); pairs are

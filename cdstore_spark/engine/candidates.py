@@ -1,5 +1,5 @@
-"""S5–S6: LSH band explode → salted repartition-then-hash-join with explicit
-skew-key splitting → canonical candidate pairs.
+"""S5–S6: LSH band explode → salted repartition with explicit skew-key
+splitting, enumerated in place (no join) → canonical candidate pairs.
 
 This is the shuffle heart of the pipeline — the graft analog of CDStore's
 fingerprint-batch → server-index lookup (SURVEY.md §2.A ops 9–10), where the
@@ -20,16 +20,14 @@ the document-channel MinHash-LSH / SimHash candidate joins:
    10^12-row scale a hot bucket therefore cannot produce an O(m²) shuffle
    explosion, and nothing is silently dropped: skew_stats reports bucket
    maxima and split counts.
-2. **Triangle block split** (bucket_soft): each (sub-)bucket above
-   `bucket_soft` members is further split into g = ceil(size/soft) blocks;
-   each (i <= j) block pair becomes its own join key, so one hot bucket
-   fans out over g(g+1)/2 shuffle partitions instead of landing on one
-   reducer. Every pair is still enumerated exactly once (cross pairs
-   appear only under key (i, j) with i = block(a) <= j = block(b); the
-   a < b filter dedups within-block keys). This is the "salted
-   repartition-then-hash-join" of the north rule — the salt is the
-   (sub-bucket, block-pair) id, and the join shuffle hashes on
-   (channel, band_idx, band_hash, sub, i, j).
+2. **Block split** (bucket_soft): each sub-bucket is cut into contiguous
+   blocks of <= `bucket_soft` members, and each (i <= j) block pair
+   becomes one row carrying both member slices, so one hot bucket fans
+   out over g(g+1)/2 bounded rows spread by a single explicit-width
+   exchange instead of landing on one reducer. Every pair is still
+   enumerated exactly once (cross pairs only in row (block(a),
+   block(b)); within-block pairs only in the diagonal row). This is the
+   "salted repartition" of the north rule — the salt is the block pair.
 
 Both layers use the same deterministic member order as the single-node
 oracle (sorted clip_id), so engine and oracle enumerate identical candidate
@@ -126,10 +124,10 @@ def candidate_pairs(feats: DataFrame, cfg: PipelineConfig = DEFAULT
     # hot enough to breach that is already generating O(m*cap) pairs and
     # needs an upstream policy cap, not a sort.
     # dedup_key=["channel"]: the groupBy below collapses (band_idx,
-    # band_hash) anyway, so hot buckets repeating the same member set
-    # across bands (the near-silence sentinel bucket fills one identical
-    # bucket in EVERY band of a channel) are enumerated once per channel
-    # instead of once per band — the pair set per channel is unchanged.
+    # band_hash) anyway, so buckets repeating the same member set across
+    # bands (the near-silence sentinel bucket fills one identical bucket
+    # in EVERY band of a channel) are enumerated once per channel instead
+    # of once per band — the pair set per channel is unchanged.
     raw = capped_bucket_pairs(bands, key, "clip_id",
                               cap=cfg.bucket_cap, soft=cfg.bucket_soft,
                               dedup_key=["channel"])

@@ -5,7 +5,7 @@ The north rule stores clips in Iceberg tables; this sandbox has no
 iceberg-spark-runtime jar and no network to fetch one (SURVEY.md §0), so
 the tested backend is parquet+manifest (StageCheckpoint provides the
 snapshot/lineage/resume semantics). On a real cluster, constructing the
-session with iceberg_session_builder() flips every read/write in the
+session with iceberg_session_builder() flips every table read in the
 engine to Iceberg with no other code change.
 """
 
@@ -48,12 +48,3 @@ def read_table(spark: SparkSession, location: str) -> DataFrame:
         return spark.read.format("iceberg").load(location)
     return spark.read.parquet(location)
 
-
-def append_table(df: DataFrame, location: str) -> None:
-    """Append a snapshot: Iceberg commit when available, parquet append
-    otherwise (atomicity then comes from StageCheckpoint's manifest)."""
-    if "/" not in location and "." in location and \
-            iceberg_available(df.sparkSession):
-        df.writeTo(location).append()
-        return
-    df.write.mode("append").parquet(location)

@@ -360,10 +360,10 @@ def minhash_lsh_pairs(df: DataFrame, cfg: PipelineConfig = DEFAULT,
     sigs = doc_signatures(sig_in, cfg)
     bands = sigs.select("doc_id",
                         F.posexplode("bands").alias("band_idx", "bh"))
-    # dedup_key=[]: only (a, b) survives the distinct below, so hot
-    # buckets with identical member sets across the 32 bands (an exact-
-    # duplicate group lands its whole membership in one bucket PER band)
-    # are enumerated once, not 32 times. Checkpointed, not persisted: cand
+    # dedup_key=[]: only (a, b) survives the distinct below, so buckets
+    # with identical member sets across the 32 bands (an exact-duplicate
+    # group lands its whole membership in one bucket PER band) are
+    # enumerated once, not 32 times. Checkpointed, not persisted: cand
     # feeds the gram prune and both verification joins, and as a cached
     # plan it would be printed into each of them
     cand = scoped_checkpoint(

@@ -50,9 +50,8 @@ def suffix_array(tokens: np.ndarray) -> np.ndarray:
 def lcp_array(tokens: np.ndarray, sa: np.ndarray) -> np.ndarray:
     """Kasai LCP: lcp[i] = LCP(suffix sa[i-1], suffix sa[i]); lcp[0] = 0.
 
-    Reference implementation (O(n), but a per-token Python loop); the
-    pipeline uses lcp_array_hashed, which computes the same array with
-    vectorized NumPy. Kept for cross-checking in tests.
+    Exact (token comparisons, no hashing) — O(n) amortized, but a
+    per-token Python loop, so it serves the test cross-check only.
     """
     n = tokens.shape[0]
     lcp = np.zeros(n, dtype=np.int64)
@@ -75,57 +74,15 @@ def lcp_array(tokens: np.ndarray, sa: np.ndarray) -> np.ndarray:
     return lcp
 
 
-def lcp_array_hashed(tokens: np.ndarray, sa: np.ndarray) -> np.ndarray:
-    """LCP of adjacent suffix-array entries via vectorized binary search on
-    O(1) polynomial span hashes — no per-token Python.
-
-    Produces the same values as Kasai with overwhelming probability (64-bit
-    span hashes; a collision could only overstate one lcp entry). All
-    comparisons run simultaneously across the n-1 adjacent pairs: log2(n)
-    rounds of whole-array hash compares.
-    """
-    from . import hashing as H
-
-    n = tokens.shape[0]
-    lcp = np.zeros(n, dtype=np.int64)
-    if n < 2:
-        return lcp
-    mixed = H.mix64(tokens.astype(np.uint64))
-    prefix = H.poly_prefix(mixed)
-    inv = H.poly_inv_powers(n + 1)
-
-    i_pos = sa[:-1].astype(np.int64)     # suffix starts (previous in SA)
-    j_pos = sa[1:].astype(np.int64)      # suffix starts (current in SA)
-    max_l = n - np.maximum(i_pos, j_pos)  # upper bound per pair
-    lo = np.zeros(i_pos.shape[0], dtype=np.int64)
-    hi = max_l.copy()
-    # invariant: LCP in [lo, hi]; binary search all pairs at once.
-    # equality test uses the RAW shift-invariant span value
-    # (prefix[e]-prefix[s])*inv[s] — equal spans ⇔ equal raw values, no
-    # finalizer mixing needed in a pure equality test
-    while True:
-        active = lo < hi
-        if not active.any():
-            break
-        mid = (lo + hi + 1) >> 1
-        ia = i_pos + np.where(active, mid, 0)
-        ib = j_pos + np.where(active, mid, 0)
-        ha = (prefix[ia] - prefix[i_pos]) * inv[i_pos]
-        hb = (prefix[ib] - prefix[j_pos]) * inv[j_pos]
-        eq = (ha == hb) & active
-        lo = np.where(eq, mid, lo)
-        hi = np.where(active & ~eq, mid - 1, hi)
-    lcp[1:] = lo
-    return lcp
-
-
 def longest_common_run_sa(a: np.ndarray, b: np.ndarray
                           ) -> tuple[int, int, int]:
     """Longest common substring via suffix array + LCP over the separated
-    concatenation — the textbook construction. Kept as the cross-check
-    reference for longest_common_run (tests assert equal lengths); the
-    hot path uses the hashed binary search below, which does the same job
-    in ~6 vector ops per round instead of a prefix-doubling sort cascade.
+    concatenation — the textbook construction, with the exact Kasai LCP.
+    Kept as the cross-check reference for longest_common_run (tests assert
+    equal lengths): sharing none of its span-hash collision model, it can
+    catch a collision the hashed search would accept. The hot path uses
+    the hashed binary search below, which does the same job in ~6 vector
+    ops per round instead of a prefix-doubling sort cascade.
 
     Returns (length, start_in_a, start_in_b); (0, -1, -1) when none.
     """
@@ -136,7 +93,7 @@ def longest_common_run_sa(a: np.ndarray, b: np.ndarray
     sep = lo - 1
     s = np.concatenate((a.astype(np.int64), [sep], b.astype(np.int64)))
     sa = suffix_array(s)
-    lcp = lcp_array_hashed(s, sa)
+    lcp = lcp_array(s, sa)
     side = sa < na                       # True = suffix starts in a
     cross = side[1:] != side[:-1]        # adjacent suffixes from different halves
     if not cross.any():
@@ -188,8 +145,8 @@ def longest_common_run(a: np.ndarray, b: np.ndarray,
         it so a single miss at min_len proves rejection — returns
         (0, -1, -1) without resolving the exact sub-threshold length.
 
-    Equal span hashes stand in for equal content (64-bit polynomial —
-    same collision model lcp_array_hashed already accepts). Returns
+    Equal span hashes stand in for equal content (64-bit polynomial; a
+    collision could only overstate the run). Returns
     (length, start_in_a, start_in_b) with the FIRST qualifying start in
     `a` (and the first match of that window in `b`); (0, -1, -1) when no
     common run of >= max(min_len, 1) tokens exists.

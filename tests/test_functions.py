@@ -222,43 +222,74 @@ class TestMultimodal:
 class TestBucketPairs:
     """The shared skew-bounded enumerator (engine/bucket_pairs.py)."""
 
-    # bucket sizes straddle every physical-path boundary: the in-place
-    # small-bucket path (<= soft), the triangle block join (soft < n <=
-    # cap, including n == soft + 1 and n == cap exactly) and the
-    # sub-bucket + representative chain (n > cap)
+    # bucket sizes straddle both split boundaries: the block split at
+    # soft (n == soft, soft + 1: one block vs two) and the sub-bucket split
+    # at cap (n == cap, cap + 1: one sub-bucket vs a representative chain)
     _SIZES = [2, 15, 16, 17, 64, 65]
 
-    def test_exact_below_cap(self, spark):
+    @staticmethod
+    def _pairs(spark, buckets, dedup_key, cap, soft):
+        """Run capped_bucket_pairs over {k: members} (disjoint member
+        sets) and return the (a, b) set; each pair must be emitted exactly
+        once, even under dedup_key=[], where every bucket is repeated
+        under 3 keys."""
+        from cdstore_spark.engine.bucket_pairs import capped_bucket_pairs
+        reps = 1 if dedup_key is None else 3
+        rows = [(k * reps + r, x) for k, ms in buckets.items()
+                for r in range(reps) for x in ms]
+        df = spark.createDataFrame(rows, "k int, member string")
+        out = capped_bucket_pairs(df, ["k"], "member", cap=cap, soft=soft,
+                                  dedup_key=dedup_key).select("a", "b")
+        got = list(map(tuple, out.toPandas().values))
+        assert len(got) == len(set(got))
+        return set(got)
+
+    @pytest.mark.parametrize("dedup_key", [None, []],
+                             ids=["per_key", "dedup"])
+    def test_exact_below_cap(self, spark, dedup_key):
         # buckets smaller than cap enumerate ALL pairs — the naive join's
         # output, which is what keeps the exact-oracle contract rows valid
-        from cdstore_spark.engine.bucket_pairs import capped_bucket_pairs
-        rows = [(k, f"m{k:02d}_{i:03d}") for k, n in enumerate(self._SIZES)
-                for i in range(n)]
-        df = spark.createDataFrame(rows, "k int, member string")
-        got = set(map(tuple, capped_bucket_pairs(df, ["k"], "member",
-                                                 cap=64, soft=16)
-                      .select("a", "b").toPandas().values))
+        buckets = {k: [f"m{k:02d}_{i:03d}" for i in range(n)]
+                   for k, n in enumerate(self._SIZES)}
+        got = self._pairs(spark, buckets, dedup_key, cap=64, soft=16)
         exp = set()
-        for k, n in enumerate(self._SIZES):
-            exp |= _mirror_capped_pairs(
-                [f"m{k:02d}_{i:03d}" for i in range(n)], 64)
+        for ms in buckets.values():
+            exp |= _mirror_capped_pairs(ms, 64)
         assert got == exp
 
-    def test_hot_bucket_linear_and_connected(self, spark):
-        from cdstore_spark.engine.bucket_pairs import capped_bucket_pairs
+    @pytest.mark.parametrize("dedup_key", [None, []],
+                             ids=["per_key", "dedup"])
+    def test_hot_bucket_linear_and_connected(self, spark, dedup_key):
         from cdstore_spark.kernels import unionfind
         m, cap = 600, 64
         members = [f"d{i:04d}" for i in range(m)]
-        df = spark.createDataFrame([(0, x) for x in members],
-                                   "k int, member string")
-        got = set(map(tuple, capped_bucket_pairs(df, ["k"], "member",
-                                                 cap=cap, soft=16)
-                      .select("a", "b").toPandas().values))
+        got = self._pairs(spark, {0: members}, dedup_key, cap=cap, soft=16)
         assert got == _mirror_capped_pairs(members, cap)
         assert len(got) <= m * cap                   # linear bound
         assert len(got) < m * (m - 1) // 2 / 4       # ≪ quadratic
         comp = unionfind.components(list(got), members)
         assert len(set(comp.values())) == 1          # still one component
+
+    def test_plan_build_runs_no_job(self, spark):
+        # building the enumerator's plan must not measure the data on the
+        # driver: no Spark job runs until the caller's own action, even
+        # for a hot bucket that spans several sub-buckets (m > cap)
+        from cdstore_spark.engine.bucket_pairs import capped_bucket_pairs
+        df = spark.createDataFrame([(0, f"h{i:03d}") for i in range(200)],
+                                   "k int, member string")
+        sc = spark.sparkContext
+        sc.setJobGroup("bucket_pairs_plan", "plan build only")
+        try:
+            out = capped_bucket_pairs(df, ["k"], "member", cap=64, soft=16,
+                                      dedup_key=[])
+            ran = list(sc.statusTracker()
+                       .getJobIdsForGroup("bucket_pairs_plan"))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setJobDescription(None)
+        assert ran == []
+        assert out.count() == len(_mirror_capped_pairs(
+            [f"h{i:03d}" for i in range(200)], 64))
 
     def test_doc_lsh_and_simhash_plans_have_no_window(self, spark):
         # regression guard (mirrors test_plans.py's audio-path guard): the
